@@ -4,8 +4,8 @@
 Default mode: at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS]:
   1. index build over a deterministic synthetic transcript corpus
-     (size scaled by sf) — reports turns/sec; $SPARK_GRAFT_CODEC
-     ('vbyte' default | 'for' | 'auto') selects the posting codec;
+     (size scaled by sf) — reports turns/sec; posting blocks are
+     vbyte-compressed (the one stored format);
   2. query p50/p95 latency over the reference query set through the
      compressed-index block-max path;
   3. headline relational/BM25/dedup queries on the driver testdata.
@@ -96,7 +96,6 @@ def run_build_and_queries(master_cores: int, workdir: str, n_convs: int, n_queri
         transcripts,
         f"{workdir}/index",
         resume=False,
-        codec_name=os.environ.get("SPARK_GRAFT_CODEC", "vbyte"),
     )
     build_sec = time.time() - t0
     st1, tot1 = _read_steal()
@@ -230,7 +229,7 @@ def main():
         return
 
     # ---- default per-round bench ------------------------------------------
-    # Contention-aware protocol (VERDICT r3 next #1): this host steals
+    # Contention-aware protocol: this host steals
     # CPU with documented ±2-3x run-to-run variance, so a single-rep
     # bench cannot distinguish a code regression from a noisy neighbor.
     # Default mode therefore (a) records /proc/stat steal%% PER PHASE,
@@ -311,11 +310,10 @@ def main():
         }
         for b in builds
     ]
-    # The driver captures only a ~2000-char stdout tail: in r4 the
-    # 98-entry per-query dict pushed the single JSON line to ~4 KB and
-    # BENCH_r04.json recorded `parsed: null`. The FINAL line is now a
-    # compact headline (<1.5 KB) and the full per-query dict goes to a
-    # committed artifact referenced by path.
+    # A caller that keeps only a ~2000-char stdout tail cannot parse
+    # the ~4 KB line the 98-entry per-query dict makes. The FINAL line is therefore a compact headline
+    # (<1.5 KB) and the full per-query dict goes to a committed artifact
+    # referenced by path.
     full_path = REPO / "BENCH" / "bench_full_latest.json"
     reg_lat = sorted(
         v

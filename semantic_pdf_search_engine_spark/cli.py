@@ -46,7 +46,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--q", required=True)
     q.add_argument("--k", type=int, default=10)
     q.add_argument("--spans", action="store_true", help="add match spans")
-    q.add_argument("--tree-reduce", action="store_true")
     q.add_argument(
         "--snapshot", type=int, default=None,
         help="time-travel: answer from a retained snapshot id",
@@ -239,7 +238,7 @@ def main(argv: list[str] | None = None) -> int:
         from semantic_pdf_search_engine_spark.sources.index_store import load_index
 
         idx = load_index(spark, args.index, snapshot_id=args.snapshot)
-        hits = search(idx, args.q, args.k, use_tree_reduce=args.tree_reduce)
+        hits = search(idx, args.q, args.k)
         if args.spans:
             hits = refine_spans(hits, args.q)
         for row in hits.collect():

@@ -1,27 +1,16 @@
-"""Delta + varbyte / FOR posting compression, fully vectorized numpy.
+"""Delta + VByte posting compression, fully vectorized numpy.
 
 Posting blocks store three parallel uint arrays — doc-id gaps, term
-frequencies, doc lengths — as compressed BinaryType columns under a
-codec recorded in the index manifest and dispatched at decode:
-
-- ``vbyte``  — VByte (7 data bits per byte, MSB = continuation,
-  little-endian groups). Byte-granular, good for skewed gap
-  distributions with occasional large values.
-- ``for``    — frame-of-reference bit packing: per block, subtract the
-  frame minimum and pack every delta at the block's fixed bit width
-  (MSB-first), after a 13-byte header ``[width u8][n u32 LE]
-  [min u64 LE]``. Fixed width makes decode a single unpackbits +
-  shift-accumulate — no per-value branching — and compresses dense
-  low-gap blocks below VByte's 1-byte-per-value floor.
-- ``auto``   — per-block best-of-both: each block carries a 1-byte tag
-  and stores whichever of the two encodings is smaller (see
-  `auto_encode_groups` for the distribution trade-off).
+frequencies, doc lengths — as VByte-compressed BinaryType columns
+(7 data bits per byte, MSB = continuation, little-endian groups).
+The index manifest records the format as ``params.codec = "vbyte"``;
+`decode_block` refuses any other recorded value rather than misread
+foreign bytes.
 
 Runs inside applyInPandas (Arrow batches); no per-row Python. Encode
 and decode are loop-free over the value count (loops run over
-byte-width ≤ 10 / bit-width ≤ 64, each iteration vectorized over the
-whole Arrow batch), so a 4096-entry block costs microseconds, not
-milliseconds.
+byte-width ≤ 10, each iteration vectorized over the whole Arrow
+batch), so a 4096-entry block costs microseconds, not milliseconds.
 """
 
 from __future__ import annotations
@@ -94,113 +83,13 @@ def delta_decode(gaps: np.ndarray, base: int = 0) -> np.ndarray:
     return (np.cumsum(gaps.astype(np.int64)) + base).astype(np.int64)
 
 
-# ---------------------------------------------------------------------------
-# frame-of-reference bit packing
-# ---------------------------------------------------------------------------
-
-_FOR_HEADER = 13  # [width u8][n u32 LE][min u64 LE]
-
-
-def _bit_widths(maxima: np.ndarray) -> np.ndarray:
-    """Bits needed to represent each value in `maxima` (min width 1).
-    Integer-exact (no log2 float path — wrong above 2**53)."""
-    m = np.ascontiguousarray(maxima, dtype=np.uint64)
-    w = np.ones(m.size, dtype=np.int64)
-    for s in range(1, 64):
-        w += (m >= np.uint64(1) << np.uint64(s)).astype(np.int64)
-    return w
-
-
-def for_encode_groups(
-    values: np.ndarray, starts: np.ndarray, ends: np.ndarray
-) -> tuple[bytes, np.ndarray]:
-    """FOR-encode each [starts[i], ends[i]) slice of `values` as an
-    independent block; returns (flat buffer, per-group byte counts) so
-    the batch encoder can compress a whole Arrow batch in one call and
-    slice per block — same contract as the vbyte group encoder."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    starts = np.ascontiguousarray(starts, dtype=np.int64)
-    ends = np.ascontiguousarray(ends, dtype=np.int64)
-    ngroups = starts.size
-    if ngroups == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    counts = ends - starts
-    seg = np.repeat(np.arange(ngroups), counts)
-    gmin = np.zeros(ngroups, dtype=np.uint64)
-    dmax = np.zeros(ngroups, dtype=np.uint64)
-    nz = counts > 0
-    if v.size:
-        gmin[nz] = np.minimum.reduceat(v, starts[nz])
-        deltas = v - gmin[seg]
-        dmax[nz] = np.maximum.reduceat(deltas, starts[nz])
-    else:
-        deltas = v
-    widths = _bit_widths(dmax)
-
-    group_bytes = _FOR_HEADER + ((counts * widths + 7) >> 3)
-    byte_off = np.zeros(ngroups, dtype=np.int64)
-    byte_off[1:] = np.cumsum(group_bytes)[:-1]
-    out = np.zeros(int(group_bytes.sum()), dtype=np.uint8)
-
-    # headers, vectorized across groups
-    out[byte_off] = widths.astype(np.uint8)
-    for i in range(4):
-        out[byte_off + 1 + i] = ((counts >> (8 * i)) & 0xFF).astype(np.uint8)
-    for i in range(8):
-        out[byte_off + 5 + i] = (
-            (gmin >> np.uint64(8 * i)) & np.uint64(0xFF)
-        ).astype(np.uint8)
-
-    if v.size:
-        # absolute bit position of each value's MSB (blocks byte-aligned)
-        within = np.arange(v.size, dtype=np.int64) - starts[seg]
-        w_per_val = widths[seg]
-        bit_start = (byte_off[seg] + _FOR_HEADER) * 8 + within * w_per_val
-        # loop over bit index j (≤ 64, vectorized over the whole batch):
-        # bit j of a value is (delta >> (w-1-j)) & 1, MSB-first
-        for j in range(int(widths.max())):
-            active = w_per_val > j
-            if not active.any():
-                break
-            sh = (w_per_val[active] - 1 - j).astype(np.uint64)
-            bit = ((deltas[active] >> sh) & np.uint64(1)).astype(np.uint8)
-            pos = bit_start[active] + j
-            np.bitwise_or.at(out, pos >> 3, bit << (7 - (pos & 7)).astype(np.uint8))
-    return out.tobytes(), group_bytes
-
-
-def for_encode(arr: np.ndarray) -> bytes:
-    """FOR-encode a single 1-D array of unsigned ints as one block."""
-    a = np.ascontiguousarray(arr, dtype=np.uint64)
-    buf, _ = for_encode_groups(
-        a, np.zeros(1, dtype=np.int64), np.asarray([a.size], dtype=np.int64)
-    )
-    return buf
-
-
-def for_decode(buf: bytes) -> np.ndarray:
-    """Decode one FOR block back to uint64 values."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    w = int(b[0])
-    n = int.from_bytes(bytes(b[1:5]), "little")
-    mn = np.uint64(int.from_bytes(bytes(b[5:13]), "little"))
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    bits = np.unpackbits(b[_FOR_HEADER:], count=n * w).reshape(n, w)
-    vals = np.zeros(n, dtype=np.uint64)
-    for j in range(w):  # MSB-first shift-accumulate, vectorized over n
-        vals = (vals << np.uint64(1)) | bits[:, j].astype(np.uint64)
-    return vals + mn
-
-
 def vb_encode_groups(
     values: np.ndarray, starts: np.ndarray, ends: np.ndarray
 ) -> tuple[bytes, np.ndarray]:
-    """VByte group encoder under the same (flat buffer, per-group byte
-    counts) contract as `for_encode_groups` — one whole-batch encode,
-    per-group byte counts derived from the per-value counts."""
+    """VByte-encode each [starts[i], ends[i]) slice of `values`:
+    returns (flat buffer, per-group byte counts) from one whole-batch
+    encode, so the batch encoder compresses an Arrow batch in one call
+    and slices per block."""
     buf, nbytes = vb_encode_counts(values)
     starts = np.ascontiguousarray(starts, dtype=np.int64)
     ends = np.ascontiguousarray(ends, dtype=np.int64)
@@ -210,67 +99,21 @@ def vb_encode_groups(
     return buf, cum[ends] - cum[starts]
 
 
-def auto_encode_groups(
-    values: np.ndarray, starts: np.ndarray, ends: np.ndarray
-) -> tuple[bytes, np.ndarray]:
-    """Per-block adaptive codec: encode every group BOTH ways (encode
-    is a negligible slice of build cost), keep whichever is smaller,
-    and prepend a 1-byte tag (0 = vbyte, 1 = FOR) so decode dispatches
-    per block. Dense hot-term blocks get FOR's sub-byte bit packing;
-    Zipf-tailed gap blocks — where one outlier gap would widen the
-    whole FOR frame — keep VByte. Strictly ≤ min(vbyte, for) + 1 byte
-    per block, so no distribution is pathological."""
-    vb_buf, vb_nb = vb_encode_groups(values, starts, ends)
-    fo_buf, fo_nb = for_encode_groups(values, starts, ends)
-    vb_off = np.concatenate([[0], np.cumsum(vb_nb)])
-    fo_off = np.concatenate([[0], np.cumsum(fo_nb)])
-    use_for = fo_nb < vb_nb
-    parts = [
-        (b"\x01" + fo_buf[fo_off[i] : fo_off[i + 1]])
-        if use_for[i]
-        else (b"\x00" + vb_buf[vb_off[i] : vb_off[i + 1]])
-        for i in range(starts.size)
-    ]
-    return b"".join(parts), np.minimum(vb_nb, fo_nb) + 1
+CODEC = "vbyte"
 
 
-def auto_decode(buf: bytes) -> np.ndarray:
-    if len(buf) == 0:
-        return np.zeros(0, dtype=np.uint64)
-    body = buf[1:]
-    return for_decode(body) if buf[:1] == b"\x01" else vb_decode(body)
+def check_codec(codec_name: str) -> None:
+    """Raise ValueError unless `codec_name` is the one stored format."""
+    if codec_name != CODEC:
+        raise ValueError(
+            f"posting blocks recorded with codec {codec_name!r}; "
+            f"only {CODEC!r} is readable"
+        )
 
 
-#: codec name → (group encoder, single-array decoder)
-CODECS = {
-    "vbyte": (vb_encode_groups, vb_decode),
-    "for": (for_encode_groups, for_decode),
-    "auto": (auto_encode_groups, auto_decode),
-}
-DEFAULT_CODEC = "vbyte"
-
-
-def _single_encode(arr: np.ndarray, codec_name: str) -> bytes:
-    enc, _ = CODECS[codec_name]
-    a = np.ascontiguousarray(arr, dtype=np.uint64)
-    return enc(
-        a, np.zeros(1, dtype=np.int64), np.asarray([a.size], dtype=np.int64)
-    )[0]
-
-
-def encode_block(
-    doc_ids: np.ndarray,
-    tfs: np.ndarray,
-    dls: np.ndarray,
-    base: int,
-    codec_name: str = DEFAULT_CODEC,
-):
+def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, base: int):
     """(sorted doc_ids, tfs, dls) → (gaps_bin, tfs_bin, dls_bin)."""
-    return (
-        _single_encode(delta_encode(doc_ids, base), codec_name),
-        _single_encode(np.ascontiguousarray(tfs, dtype=np.uint64), codec_name),
-        _single_encode(np.ascontiguousarray(dls, dtype=np.uint64), codec_name),
-    )
+    return vb_encode(delta_encode(doc_ids, base)), vb_encode(tfs), vb_encode(dls)
 
 
 def decode_block(
@@ -278,8 +121,11 @@ def decode_block(
     tfs_bin: bytes,
     dls_bin: bytes,
     base: int,
-    codec_name: str = DEFAULT_CODEC,
+    codec_name: str = CODEC,
 ):
-    _, dec = CODECS[codec_name]
-    docs = delta_decode(dec(gaps_bin), base)
-    return docs, dec(tfs_bin).astype(np.int64), dec(dls_bin).astype(np.int64)
+    """(gaps_bin, tfs_bin, dls_bin) → (doc_ids, tfs, dls) int64 arrays.
+    `codec_name` is the manifest's recorded format, checked, not
+    dispatched on."""
+    check_codec(codec_name)
+    docs = delta_decode(vb_decode(gaps_bin), base)
+    return docs, vb_decode(tfs_bin).astype(np.int64), vb_decode(dls_bin).astype(np.int64)

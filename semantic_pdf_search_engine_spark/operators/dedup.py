@@ -15,9 +15,9 @@ gap list); each is designed around its shuffle profile:
                        band matches, so the shuffle moves (doc, band)
                        pairs, never O(n²). Hash = md5 (portable: same
                        function exists in DuckDB for the oracle twin).
-* simhash            — 16-bit sign-aggregated fingerprint via an
-                       explode over bit positions + groupBy(doc) —
-                       integer arithmetic end-to-end, exact SQL twin.
+* simhash            — 16-bit sign-aggregated fingerprint, one Arrow
+                       pass per doc, no shuffle — integer arithmetic
+                       end-to-end, exact SQL twin.
 * embedding_neardup_pairs — cosine over a bounded id range (the
                        brute-force spine; the LSH-bucketed scale path
                        lives in operators/similarity.py).
@@ -29,11 +29,13 @@ DuckDB agree byte-for-byte.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.functions.quality import fingerprint
-from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
+from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py, tokens_expr
 from semantic_pdf_search_engine_spark.functions.rounding import round_half_up
 
 N_MINHASH = 4
@@ -55,40 +57,18 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def shingles_expr(text, n: int = SHINGLE_N):
-    """Distinct token n-gram shingles as ARRAY<STRING> (1-based
-    element_at — mirrors DuckDB list indexing exactly)."""
-    toks = tokens_expr(text)
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 def doc_shingles(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "arrow",
 ) -> DataFrame:
     """(id, shingle): one row per DISTINCT token-3-gram per doc.
 
-    mode='arrow' (default): tokenize + window + set per doc in one
-    Arrow pass — the shingle construction already byte-pinned to the
-    DuckDB list semantics by the minhash parity test (the pure-Column
-    form pays a nested element_at chain per gram: measured ~4× slower
-    at sf0.1). mode='column' keeps the Column-expr spec (exact-equality
-    tested against arrow)."""
-    if mode == "column":
-        return docs.select(
-            F.col(id_col), F.explode(shingles_expr(F.col(text_col))).alias("shingle")
-        )
+    Tokenize + window + set per doc in one Arrow pass — the shingle
+    construction byte-pinned to the DuckDB list semantics by the
+    minhash parity test (a pure-Column form pays a nested element_at
+    chain per gram: measured ~4× slower at sf0.1; tests/test_dedup.py
+    keeps it as the exact-equality spec)."""
     import pandas as pd
 
     from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
@@ -208,11 +188,11 @@ def minhash_signatures(
     """(doc_id, sig_1..sig_N): one min-hash signature per permutation.
 
     One Arrow pass per batch: tokenize + shingle + hash in Python
-    (C-backed), min per permutation. The previous pure-Column form
-    re-evaluated the whole shingles_expr expression tree once PER
-    SIGNATURE (Catalyst does not CSE across projection items through
-    higher-order functions), making signatures the dominant cost of the
-    minhash suite entry (17.6 s at sf0.1 → ~1 s here).
+    (C-backed), min per permutation. A pure-Column form re-evaluates
+    the whole shingle expression tree once PER SIGNATURE (Catalyst
+    does not CSE across projection items through higher-order
+    functions), which made signatures the dominant cost of the minhash
+    suite entry (17.6 s at sf0.1 → ~1 s here).
 
     hash_family:
     * 'md5' — the ORACLE family: sig_i = min md5('{i}:'||shingle) by
@@ -248,8 +228,8 @@ def minhash_signatures(
         for pdf in batches:
             ids, sig_cols = [], [[] for _ in range(n_perms)]
             for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                # normalize=False: shingles_expr/the DuckDB twin both
-                # tokenize RAW lowered text (no artifact normalization)
+                # normalize=False: the DuckDB twin tokenizes RAW
+                # lowered text (no artifact normalization)
                 toks = tokenize_py(text, normalize=False)
                 if len(toks) < n:
                     continue
@@ -332,7 +312,6 @@ def simhash(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "arrow",
 ) -> DataFrame:
     """(doc_id, simhash) — 16-bit tf-weighted sign fingerprint.
 
@@ -340,96 +319,62 @@ def simhash(
     output bit j set iff S_j > 0. Integer arithmetic throughout →
     exact DuckDB twin.
 
-    mode='arrow' (default, r6): the fingerprint is a PER-DOCUMENT
-    function of the doc's own term counts, so it is computed entirely
-    inside one Arrow pass — tokenize, count, fold the 16 md5-nibble
-    signs per doc — with a cross-batch md5 memo over the (Heaps-law
-    sublinear) vocabulary. ZERO shuffles, versus the column form's
-    16-way bit explode + two corpus-keyed groupBys (the explode
-    multiplied the exchange input 16×). mode='column' keeps the
-    pure-Column spec the DuckDB oracle mirrors; both modes are pinned
-    exactly equal in tests/test_dedup.py.
+    The fingerprint is a PER-DOCUMENT function of the doc's own term
+    counts, so it is computed entirely inside one Arrow pass —
+    tokenize, count, fold the 16 md5-nibble signs per doc — with a
+    cross-batch md5 memo over the (Heaps-law sublinear) vocabulary.
+    ZERO shuffles, versus a column form's 16-way bit explode + two
+    corpus-keyed groupBys (the explode multiplies the exchange input
+    16×). tests/test_dedup.py pins it exactly equal to that
+    pure-Column spec, which the DuckDB oracle mirrors.
     """
-    if mode == "arrow":
-        import hashlib
+    import hashlib
 
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        from semantic_pdf_search_engine_spark.functions.tokenize import (
-            tokenize_py,
-        )
+    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
 
-        id_type = docs.schema[id_col].dataType.simpleString()
+    id_type = docs.schema[id_col].dataType.simpleString()
 
-        def gen(batches):
-            from collections import Counter
+    def gen(batches):
+        from collections import Counter
 
-            # md5-sign memo: term → int16 bit pattern of (nibble_j >= 8)
-            memo: dict[str, np.ndarray] = {}
+        # md5-sign memo: term → int16 bit pattern of (nibble_j >= 8)
+        memo: dict[str, np.ndarray] = {}
 
-            def signs(term: str) -> np.ndarray:
-                v = memo.get(term)
-                if v is None:
-                    h = hashlib.md5(term.encode()).hexdigest()
-                    v = np.array(
-                        [1 if int(c, 16) >= 8 else -1 for c in h[:16]],
-                        dtype=np.int64,
-                    )
-                    memo[term] = v
-                return v
-
-            for pdf in batches:
-                ids, fps = [], []
-                for did, text in zip(
-                    pdf[id_col].tolist(), pdf[text_col].tolist()
-                ):
-                    counts = Counter(tokenize_py(text, normalize=False))
-                    if not counts:
-                        continue  # zero-token docs have no fingerprint row
-                    s = np.zeros(16, dtype=np.int64)
-                    for term, tf in counts.items():
-                        s += tf * signs(term)
-                    bits = (s > 0).astype(np.int64)
-                    fps.append(int((bits << np.arange(16)).sum()))
-                    ids.append(did)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
-                        "simhash": pd.Series(fps, dtype="int64"),
-                    }
+        def signs(term: str) -> np.ndarray:
+            v = memo.get(term)
+            if v is None:
+                h = hashlib.md5(term.encode()).hexdigest()
+                v = np.array(
+                    [1 if int(c, 16) >= 8 else -1 for c in h[:16]],
+                    dtype=np.int64,
                 )
+                memo[term] = v
+            return v
 
-        return docs.select(id_col, text_col).mapInPandas(
-            gen, schema=f"{id_col} {id_type}, simhash long"
-        )
+        for pdf in batches:
+            ids, fps = [], []
+            for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
+                counts = Counter(tokenize_py(text, normalize=False))
+                if not counts:
+                    continue  # zero-token docs have no fingerprint row
+                s = np.zeros(16, dtype=np.int64)
+                for term, tf in counts.items():
+                    s += tf * signs(term)
+                bits = (s > 0).astype(np.int64)
+                fps.append(int((bits << np.arange(16)).sum()))
+                ids.append(did)
+            yield pd.DataFrame(
+                {
+                    id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
+                    "simhash": pd.Series(fps, dtype="int64"),
+                }
+            )
 
-    from semantic_pdf_search_engine_spark.operators.bm25 import tf_df
-
-    tf = tf_df(docs, id_col, text_col).withColumn(
-        "h", F.md5(F.col("term").cast("binary"))
-    )
-    bits = tf.select(
-        F.col(id_col),
-        F.col("tf"),
-        F.col("h"),
-        F.explode(F.sequence(F.lit(1), F.lit(16))).alias("j"),
-    ).withColumn(
-        "nibble",
-        F.instr(F.lit("0123456789abcdef"), F.substring(F.col("h"), F.col("j"), 1)) - 1,
-    ).withColumn(
-        "signed", F.col("tf") * F.when(F.col("nibble") >= 8, 1).otherwise(-1)
-    )
-    sj = bits.groupBy(id_col, "j").agg(F.sum("signed").alias("s"))
-    return (
-        sj.withColumn(
-            "bitval",
-            F.when(F.col("s") > 0, F.pow(F.lit(2.0), F.col("j") - 1).cast("long")).otherwise(
-                F.lit(0)
-            ),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("bitval").cast("long").alias("simhash"))
+    return docs.select(id_col, text_col).mapInPandas(
+        gen, schema=f"{id_col} {id_type}, simhash long"
     )
 
 
@@ -519,6 +464,18 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def _window_fps(text, k: int) -> list[str]:
+    """md5 hex of every k-token window occurrence of `text`, in order —
+    the one window-fingerprint recipe (raw lowered tokens, no artifact
+    normalization, space-joined) that passage_windows and
+    dup_passage_stats share with their DuckDB twins."""
+    toks = tokenize_py(text, normalize=False)
+    return [
+        hashlib.md5(" ".join(toks[j : j + k]).encode()).hexdigest()
+        for j in range(len(toks) - k + 1)
+    ]
+
+
 def passage_windows(
     docs: DataFrame,
     k: int = PASSAGE_K,
@@ -531,11 +488,7 @@ def passage_windows(
     (tokenize + slide + hash per batch); the 128-bit digest replaces
     the gram string as the shuffle key, so downstream exchanges move
     fixed-width uniform keys instead of variable-length text."""
-    import hashlib
-
     import pandas as pd
-
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
 
     id_type = docs.schema[id_col].dataType.simpleString()
 
@@ -543,12 +496,9 @@ def passage_windows(
         for pdf in batches:
             ids, fps = [], []
             for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                toks = tokenize_py(text, normalize=False)
-                for j in range(len(toks) - k + 1):
-                    ids.append(did)
-                    fps.append(
-                        hashlib.md5(" ".join(toks[j : j + k]).encode()).hexdigest()
-                    )
+                w = _window_fps(text, k)
+                ids.extend([did] * len(w))
+                fps.extend(w)
             yield pd.DataFrame(
                 {
                     id_col: pd.Series(ids, dtype=pdf[id_col].dtype),
@@ -579,10 +529,10 @@ def dup_passage_stats(
 
     Shuffle profile (one linear pipeline, no branch recompute):
       1. per-(doc, fp) occurrence counts computed INSIDE the Arrow
-         window pass (r6: a doc is one input row, so its window
-         multiset is complete in-batch — full map-side aggregation;
-         the former groupBy(fp, id) exchange over every occurrence is
-         gone and the first shuffle moves one row per (doc, fp));
+         window pass (a doc is one input row, so its window multiset
+         is complete in-batch — full map-side aggregation, with no
+         groupBy(fp, id) exchange over every occurrence; the first
+         shuffle moves one row per (doc, fp));
       2. count(*) OVER (PARTITION BY fp) on the (fp, doc) AGGREGATE
          (corpus-wide per-window doc count; input already compressed to
          one row per (fp, doc), so a boilerplate passage shared by a
@@ -591,12 +541,8 @@ def dup_passage_stats(
     Per-doc totals come straight from the token count (len - k + 1, a
     narrow Column expr over the docs scan) — no second windows pass.
     Hard DuckDB oracle (registry `dup_passages`)."""
-    import hashlib
-
     import pandas as pd
     from pyspark.sql.window import Window
-
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokenize_py
 
     toks = tokens_expr(F.col(text_col))
     tot = docs.select(
@@ -612,13 +558,7 @@ def dup_passage_stats(
         for pdf in batches:
             ids, fps, occs = [], [], []
             for did, text in zip(pdf[id_col].tolist(), pdf[text_col].tolist()):
-                toks_l = tokenize_py(text, normalize=False)
-                c = Counter(
-                    hashlib.md5(
-                        " ".join(toks_l[j : j + k]).encode()
-                    ).hexdigest()
-                    for j in range(len(toks_l) - k + 1)
-                )
+                c = Counter(_window_fps(text, k))
                 for fp, occ in c.items():
                     ids.append(did)
                     fps.append(fp)
@@ -676,13 +616,13 @@ def repetition_metrics(
     they have >= 1 n-gram of that size.
 
     Every output column is a PER-DOCUMENT function of that doc's own
-    n-gram counts, so (r6) the integer stats (total/distinct/top) are
+    n-gram counts, so the integer stats (total/distinct/top) are
     computed inside ONE Arrow pass — a Counter per (doc, n), no gram
-    rows ever emitted, no md5, ZERO shuffles (the former shape shuffled
-    the full gram-occurrence stream through groupBy(id, n, fp) + a
-    second roll-up; counting by gram string ≡ counting by its md5).
-    The fractions stay the SAME JVM round_half_up expressions as
-    before, so the compared floats are bit-identical. Hard DuckDB
+    rows ever emitted, no md5, ZERO shuffles (no gram-occurrence
+    stream through groupBy(id, n, fp) + a second roll-up; counting by
+    gram string ≡ counting by its md5). The fractions are JVM
+    round_half_up expressions, so the compared floats are bit-identical
+    to the DuckDB twin's. Hard DuckDB
     oracle (registry `repetition_metrics`)."""
     import pandas as pd
 
@@ -841,16 +781,16 @@ def connected_components(
     canonical representative). Singletons (docs in no pair) keep
     themselves.
 
-    Scale shape (r6): the edge table carries one SELF-LOOP per node, so
+    Scale shape: the edge table carries one SELF-LOOP per node, so
     each round is a single join edges⋈labels + ONE groupBy(dst) min —
     the self-loop row delivers the node's own label into its group,
-    replacing the former left-join-back (one exchange fewer per round).
+    so no left-join-back is needed (one exchange fewer per round).
     Change detection and convergence ride the SAME materialization: the
     per-round job is the label localCheckpoint, with the changed-node
     count attached as an Observation (no separate probe job). Edge
     endpoints are restricted to `ids` once, up front — non-id endpoints
-    never conducted labels in the join-back form either (their labels
-    were never stored), so the semantics are unchanged. All shuffles
+    would not conduct labels in a join-back form either (their labels
+    are never stored), so the restriction does not change results. All shuffles
     stay on node ids (uniform). Rounds needed = graph diameter;
     near-dup clusters are shallow-diameter by construction (dense
     similarity cliques), so convergence is a handful of rounds. When
@@ -940,13 +880,13 @@ def connected_components_star(
     id — so the final labeling (node → its min neighbor, self if
     isolated) equals min-label's answer exactly (pinned by test).
 
-    Scale shape (r6): each phase is ONE window-min over the edge rows
-    partitioned by node — `min(b) OVER (PARTITION BY a)` replaces the
-    former groupBy(a)+join-back pair (the window's single exchange
-    carries the same uniform node-id key; per-group state is one
-    minimum, never a sort of the corpus). One localCheckpoint per round
-    (the mid-round e1 barrier is gone — both small-star consumers read
-    the same windowed projection), with the (count, hash-sum) checksum
+    Scale shape: each phase is ONE window-min over the edge rows
+    partitioned by node — `min(b) OVER (PARTITION BY a)` instead of a
+    groupBy(a)+join-back pair (the window's single exchange carries the
+    same uniform node-id key; per-group state is one minimum, never a
+    sort of the corpus). One localCheckpoint per round (no mid-round
+    e1 barrier — both small-star consumers read the same windowed
+    projection), with the (count, hash-sum) checksum
     attached to that materialization as an Observation instead of a
     separate collect job. Convergence = edge-set fixpoint, checksum
     cheap-reject + exact two-sided exceptAll CONFIRMATION at the
@@ -997,8 +937,8 @@ def connected_components_star(
         )
         # -- small-star ---------------------------------------------------
         # duplicates in ls are harmless here: the window min is
-        # multiplicity-insensitive and the final _clean dedupes — so the
-        # former mid-round distinct+checkpoint barrier is unnecessary
+        # multiplicity-insensitive and the final _clean dedupes — so a
+        # mid-round distinct+checkpoint barrier is unnecessary
         e1 = ls.filter(F.col("a") != F.col("b"))
         dirr = e1.select(
             F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")

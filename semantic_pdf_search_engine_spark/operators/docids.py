@@ -101,12 +101,3 @@ def unpersist_doc_ids(df: DataFrame) -> None:
     if parent is not None:
         parent.unpersist()
 
-
-def assign_doc_ids_small(df: DataFrame, order_cols=ORDER_COLS) -> DataFrame:
-    """Window-based variant for small data / oracle parity checks.
-    Single-partition sort — do NOT use at scale (kept as the semantic
-    spec the scalable path is tested against)."""
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(*[F.col(c) for c in order_cols])
-    return df.withColumn("doc_id", F.row_number().over(w).cast("long") - F.lit(1))

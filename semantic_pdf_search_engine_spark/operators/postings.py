@@ -66,41 +66,19 @@ POSTINGS_SCHEMA = (
 _ENCODE_SCHEMA = POSTINGS_SCHEMA.replace("term string", "term_id long")
 
 
-def term_frequencies(
-    docs: DataFrame, text_col: str = "text", mode: str = "arrow"
-) -> DataFrame:
+def term_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, term, tf, dl) — tokenize + term frequencies.
 
-    mode='arrow' (default): the Arrow-batched pandas path — one
-    vectorized pass per batch, map-side aggregated to (doc, term)
-    grain before any shuffle (E2 parity shape,
-    /root/reference/src/embed.rs:44-63). Measured FASTER than the JVM
-    path on this workload: pandas' C string kernels with the
-    artifact-detector gate beat an 18-deep regexp_replace chain in
-    java.util.regex (each chained replace copies the UTF8String).
-
-    mode='jvm': normalize_expr + tokens_expr + explode + hash
-    aggregate, entirely whole-stage codegen — zero Python; kept for
-    environments where Python workers are the constraint. Both modes
-    are pinned EXACTLY equal by tests/test_tf_parity.py.
+    The Arrow-batched pandas path: one vectorized pass per batch,
+    map-side aggregated to (doc, term) grain before any shuffle (E2
+    parity shape, the reference's embed.rs:44-63). Measured faster
+    than a JVM normalize_expr + tokens_expr + explode chain on this
+    workload: pandas' C string kernels with the artifact-detector gate
+    beat an 18-deep regexp_replace chain in java.util.regex (each
+    chained replace copies the UTF8String). tests/test_tf_parity.py
+    pins it exactly equal to that Column-expression spec.
     """
-    if mode == "arrow":
-        return term_freq_map_in_pandas(docs, id_cols=("doc_id",), text_col=text_col)
-    from semantic_pdf_search_engine_spark.functions.normalize import normalize_expr
-    from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
-
-    ft = tokens_expr(normalize_expr(F.col(text_col)))  # tokens_expr lowers
-    return (
-        docs.select("doc_id", ft.alias("_ft"))
-        .select(
-            "doc_id",
-            F.size("_ft").cast("int").alias("dl"),
-            F.explode("_ft").alias("term"),
-        )
-        .groupBy("doc_id", "term", "dl")
-        .agg(F.count("*").cast("int").alias("tf"))
-        .select("doc_id", "term", "tf", "dl")
-    )
+    return term_freq_map_in_pandas(docs, id_cols=("doc_id",), text_col=text_col)
 
 
 def corpus_stats(docs: DataFrame, tf: DataFrame) -> tuple[int, float]:
@@ -134,32 +112,25 @@ def build_posting_blocks(
     avgdl: float,
     stripe_docs: int = STRIPE_DOCS,
     num_partitions: int | None = None,
-    codec_name: str = codec.DEFAULT_CODEC,
 ) -> DataFrame:
     """tf (doc_id, term, tf, dl) ⋈ (term, idf) → compressed posting blocks.
 
     One shuffle: repartition on (term, stripe_id), then per-group
     numpy encode inside applyInPandas. idf arrives precomputed so the
     block-max bounds are bit-identical to the scoring path's idf.
-    `codec_name` selects the block compression ('vbyte' | 'for'); the
-    caller records it in the index manifest so decode dispatches the
-    same codec.
+    Blocks are vbyte-compressed (operators/codec.py).
     """
-    if codec_name not in codec.CODECS:
-        raise ValueError(
-            f"unknown postings codec {codec_name!r} (have {sorted(codec.CODECS)})"
-        )
     from pyspark.sql.window import Window
 
     spark = tf.sparkSession
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
-    # r6 (guide §2.3, narrower shuffle keys): the posting shuffle+sort
-    # used to carry the TERM STRING on all ~n_postings rows; a dense
-    # int64 `term_id` (row_number over the vocab-sized dfreq — Heaps-law
-    # sublinear, the same single-group rank build_vocab performs)
-    # replaces it for the wide repartition+sort, and the term string is
+    # Narrower shuffle keys (guide §2.3): rather than carry the TERM
+    # STRING on all ~n_postings rows, the wide repartition+sort keys on
+    # a dense int64 `term_id` (row_number over the vocab-sized dfreq —
+    # Heaps-law sublinear, the same single-group rank build_vocab
+    # performs), and the term string is
     # re-attached AFTER encoding by joining the ~|blocks| output against
     # the tiny vocab map — fixed-width integer sort keys and string
     # bytes moved once per BLOCK instead of once per posting.
@@ -178,7 +149,7 @@ def build_posting_blocks(
     )
 
     k1, b = K1, B
-    group_encode = codec.CODECS[codec_name][0]  # module-level fn, pickles by ref
+    group_encode = codec.vb_encode_groups  # module-level fn, pickles by ref
 
     # mapInPandas over repartition+sortWithinPartitions, NOT
     # groupBy().applyInPandas(): with |vocab|×|stripes| groups the
@@ -225,16 +196,14 @@ def build_posting_blocks(
             grp_max = np.maximum.reduceat(contrib, starts)
             is_max = contrib == grp_max[seg_ids]
             # first True per group
-            first_idx = np.zeros(starts.size, dtype=np.int64)
             idx_all = np.flatnonzero(is_max)
             # keep the first max index per group
             grp_of = seg_ids[idx_all]
             _, first_pos = np.unique(grp_of, return_index=True)
             first_idx = idx_all[first_pos]
 
-            # group encoder: whole-batch compress, slice per block —
-            # both codecs share the (flat buffer, per-group byte
-            # counts) contract, so the split below is codec-agnostic
+            # group encoder: whole-batch compress, slice per block by
+            # the returned per-group byte counts
             g_buf, g_gb = group_encode(gaps, starts, ends)
             t_buf, t_gb = group_encode(tfs.astype(np.uint64), starts, ends)
             d_buf, d_gb = group_encode(dls.astype(np.uint64), starts, ends)

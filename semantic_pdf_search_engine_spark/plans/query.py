@@ -23,9 +23,8 @@ Pipeline (replacing the reference's Qdrant search,
      blocks, dense float64 accumulation over the ≤STRIPE_DOCS-wide
      doc range in canonical (sorted-term) order — bit-identical to the
      numpy oracle's summation order — emit the stripe-local top-k;
-  5. global merge: candidates ≤ (#stripes_kept × k) rows — either
-     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k) or
-     the treeReduce heap merge (`topk_tree`) for the RDD path.
+  5. global merge: candidates ≤ (#stripes_kept × k) rows through
+     TakeOrderedAndProject (ORDER BY score DESC, doc_id LIMIT k).
 
 Stripe-level block-max pruning is the engine's moral twin of the
 reference's anchor-based candidate pruning before expensive scoring
@@ -35,11 +34,9 @@ cannot beat the current threshold.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.config import (
@@ -111,7 +108,6 @@ def _daat_stripe_topk(
     k: int,
     scope_ids=None,
     scope_range=None,
-    codec_name: str = "vbyte",
 ):
     """The per-stripe DAAT scoring kernel — ONE definition shared by the
     single-query and batch paths: decode blocks, dense float64
@@ -127,7 +123,7 @@ def _daat_stripe_topk(
     seen = np.zeros(stripe_docs, dtype=bool)
     pdf = pdf.sort_values("term", kind="mergesort")
     for row in pdf.itertuples(index=False):
-        docs, tfs, dls = decode_block(row.gaps, row.tfs, row.dls, base, codec_name)
+        docs, tfs, dls = decode_block(row.gaps, row.tfs, row.dls, base)
         if scope_ids is not None:
             mask = np.isin(docs, scope_ids)  # exact membership
             if not mask.any():
@@ -169,7 +165,6 @@ def score_topk(
     k: int = DEFAULT_TOP_K,
     round_scores: bool = True,
     prune: bool = True,
-    use_tree_reduce: bool = False,
     conv_id: str | None = None,
     membership_cap: int | None = None,
 ) -> DataFrame:
@@ -276,7 +271,6 @@ def score_topk(
     qidf = index.docfreq.filter(F.col("term").isin(q_terms)).select("term", "idf")
     qblocks = qblocks.join(F.broadcast(qidf), "term")
 
-    k1, b = K1, B
     avgdl = index.avgdl
 
     if prune:
@@ -287,9 +281,6 @@ def score_topk(
         qblocks = qblocks.join(F.broadcast(_kept_stripes(meta, k)), "stripe_id")
 
     stripe_docs = index.stripe_docs
-    avgdl = index.avgdl
-
-    codec_name = index.codec
 
     # semi-join fallback: per-stripe truncation OFF (k_local = the
     # stripe width, so every in-range hit survives to the join) —
@@ -299,7 +290,7 @@ def score_topk(
     def score_stripe(pdf: pd.DataFrame) -> pd.DataFrame:
         ids, s = _daat_stripe_topk(
             pdf, stripe_docs, avgdl, k_local, scope_ids=scope_ids,
-            scope_range=scope_range, codec_name=codec_name,
+            scope_range=scope_range,
         )
         return pd.DataFrame({"doc_id": ids, "score": s})
 
@@ -312,8 +303,6 @@ def score_topk(
         candidates = candidates.withColumn(
             "score", round_half_up(F.col("score"), SCORE_DECIMALS)
         )
-    if use_tree_reduce:
-        return topk_tree(spark, candidates, k)
     return candidates.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
 
@@ -377,11 +366,9 @@ def score_topk_batch(
         kept = _kept_stripes(meta, k, keys=("query_id",))
         qblocks = qblocks.join(F.broadcast(kept), ["query_id", "stripe_id"])
 
-    codec_name = index.codec
-
     def score_stripe_q(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
-        ids, s = _daat_stripe_topk(pdf, stripe_docs, avgdl, k, codec_name=codec_name)
+        ids, s = _daat_stripe_topk(pdf, stripe_docs, avgdl, k)
         return pd.DataFrame(
             {
                 "query_id": np.full(ids.size, qid, dtype="int32"),
@@ -420,8 +407,8 @@ def search(
     ONE collect per call (the ≤k winner rows); the returned plan fetches
     payloads with the winner ids pushed into the docs scan as an In
     filter and the k scored rows rejoined as a broadcast LOCAL relation
-    — collecting the result does NOT re-run the scoring DAG (the former
-    shape joined the live score_topk plan, re-scoring on materialize)."""
+    — collecting the result does NOT re-run the scoring DAG (joining the
+    live score_topk plan instead would re-score on materialize)."""
     rows = score_topk(index, query, k, **kw).collect()
     if not rows:
         return index.spark.createDataFrame(
@@ -438,37 +425,6 @@ def search(
         docs.join(F.broadcast(hits), "doc_id")
         .select("doc_id", "score", "conv_id", "turn_idx", "text")
         .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-    )
-
-
-def topk_tree(spark: SparkSession, scored: DataFrame, k: int) -> DataFrame:
-    """RDD treeReduce top-k heap merge — O(log P) merge depth for very
-    wide candidate sets (SURVEY.md §4 custom-4). Semantically identical
-    to ORDER BY score DESC, doc_id ASC LIMIT k."""
-
-    def part_topk(it):
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of best k
-        for row in it:
-            item = (row["score"], -row["doc_id"])
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-        yield heap
-
-    def merge(a, b):
-        for item in b:
-            if len(a) < k:
-                heapq.heappush(a, item)
-            elif item > a[0]:
-                heapq.heapreplace(a, item)
-        return a
-
-    parts = scored.rdd.mapPartitions(part_topk)
-    heap = parts.treeReduce(merge)
-    rows = sorted(((-nd, s) for s, nd in heap), key=lambda x: (-x[1], x[0]))
-    return spark.createDataFrame(
-        [(int(d), float(s)) for d, s in rows], "doc_id long, score double"
     )
 
 

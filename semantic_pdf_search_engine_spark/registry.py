@@ -97,7 +97,8 @@ LIMIT {k}
 # ---------------------------------------------------------------------------
 
 
-_SCHEMA_CACHE: dict[str, object] = {}
+# path → (stat fingerprint of its parquet files, inferred schema)
+_SCHEMA_CACHE: dict[str, tuple[str, object]] = {}
 
 
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -106,14 +107,20 @@ def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     every call — one scheduler round-trip per registry query (~98 per
     bench pass). The memo holds the table's StructType (metadata only,
     never rows); every invocation still scans the parquet data itself.
-    The test directories are immutable fixtures, so a cached schema
-    cannot go stale within a process."""
-    sch = _SCHEMA_CACHE.get(path)
-    if sch is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-        return df
-    return spark.read.schema(sch).parquet(path)
+    A memo entry is valid only while the path's file listing (name,
+    size, mtime per parquet file) is unchanged, so a table rewritten
+    in-process is re-inferred. Paths that cannot be stat'ed locally are
+    read without the memo."""
+    try:
+        sig = _parquet_signature_cheap(path)
+    except OSError:
+        return spark.read.parquet(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = (sig, df.schema)
+    return df
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,8 +486,8 @@ def q_chunk_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_smart_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C3: sentence-packed chunks with 2-sentence overlap carry
-    (chunk.rs:521-560 + garbage filter per chunk_per_page). HARD oracle
-    since r5 (was rows-only): the stateful fold IS SQL-expressible as a
+    (chunk.rs:521-560 + garbage filter per chunk_per_page). HARD oracle:
+    the stateful fold IS SQL-expressible as a
     per-doc recursive CTE (_smart_chunks_sql) — state (cur, p1), flush
     emissions in an `emit` column, tail from the final state — matched
     byte-for-byte at sf0.001/0.01/0.1, with the flush/overlap-carry
@@ -630,7 +637,7 @@ def q_minhash_lsh_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     permutations in a numpy broadcast — n_perms× fewer digests than the
     oracle family): the configuration a 100 TB near-dup pass would run,
     vs the 4/2 demo whose tiny signature space has an exact DuckDB
-    twin. HARD oracle since r5 (was rows-only): the universal family is
+    twin. HARD oracle: the universal family is
     deterministic end-to-end, so _minhash_prod_sql embeds the seeded
     multiply-shift coefficients and replays the identical pipeline in
     DuckDB (matched at sf0.001/0.01/0.1). The banding-probability curve
@@ -666,7 +673,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup decision step computed by LARGE-STAR/SMALL-STAR
     contraction (dedup.connected_components_star — the O(log n)-round
-    chain-graph-safe path, new in r4) instead of min-label propagation.
+    chain-graph-safe path) instead of min-label propagation.
     Same hard oracle as dedup_clusters (the DuckDB recursive transitive
     closure): a driver-green row proves the star fixpoint equals the
     declarative closure on real fixture data, not just the pytest
@@ -703,9 +710,8 @@ _QVEC_CACHE: dict[str, list[float]] = {}
 def _query_vec(sf_dir: str, vec_id: int = 0) -> list[float]:
     """The deterministic ANN query vector, read DRIVER-SIDE with
     pyarrow (row-group statistics prune the scan to the group holding
-    `vec_id`) — replaces the 1-row Spark job each ann_* registry entry
-    used to run (a scheduler round-trip per query at serving time;
-    VERDICT r3 'what's wrong' #5). Cached per (sf_dir, vec_id, cheap
+    `vec_id`) — no 1-row Spark job per ann_* registry entry (a
+    scheduler round-trip per query at serving time). Cached per (sf_dir, vec_id, cheap
     source signature): a mid-session regeneration of the embeddings
     table invalidates this cache the same way it invalidates the store
     handles — the serving path never scores against a vector that no
@@ -812,7 +818,7 @@ def _write_store_sig(
 
 
 def _store_sig_valid(sig_path: str, tag: str, data_path: str) -> bool:
-    """Two-level cache validation (VERDICT r3 'what's wrong' #4): the
+    """Two-level cache validation: the
     hot path is a stat walk against the persisted cheap signature —
     zero row-group iteration, zero Spark jobs. Only when the stat walk
     misses (source files touched/moved) does the full footer signature
@@ -919,8 +925,7 @@ def _ann_index(spark: SparkSession, sf_dir: str):
 
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate ANN over the MATERIALIZED LSH store (probe set →
-    PartitionFilters on `_bucket`) — HARD oracle since r5 (was
-    rows-only): the seeded-plane bucketing is deterministic, so
+    PartitionFilters on `_bucket`) — HARD oracle: the seeded-plane bucketing is deterministic, so
     `_ann_lsh_sql` replays it in DuckDB with the same plane constants.
     Recall vs the brute path and equality with the on-the-fly path are
     asserted in tests/test_similarity.py."""
@@ -931,8 +936,8 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN over the MATERIALIZED store (n_probe nearest centroids →
-    PartitionFilters on `_ivf_bucket`) — HARD oracle since r5 (was
-    rows-only): train_ivf_centroids now uses the kmeans_fit determinism
+    PartitionFilters on `_ivf_bucket`) — HARD oracle:
+    train_ivf_centroids uses the kmeans_fit determinism
     posture (md5-ranked sample, first-k init, per-round 1e-6 centroid
     snap), so `_ann_ivf_sql` unrolls the full train→assign→probe→top-k
     pipeline in DuckDB; recall vs brute asserted in
@@ -966,7 +971,7 @@ def q_knn_join_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     path (queries stay a DataFrame: probe-bucket assignment is an Arrow
     matmul, candidates come from a cogroup on the store's partition
     column, per-bucket blocked matmul top-k — NO driver collect of the
-    query side). HARD oracle since r5 (was rows-only): bucket recall
+    query side). HARD oracle: bucket recall
     < 1 vs the exact join, but the seeded-plane probe set is
     deterministic, so `_knn_join_ann_sql` replays the probe-bucket
     candidate join in DuckDB. Equality with the broadcast path and
@@ -983,7 +988,7 @@ def q_knn_join_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_join_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch ANN against the materialized IVF table (distributed
     centroid probe assignment + cogroup on `_ivf_bucket`, n_probe=4).
-    HARD oracle since r5 (was rows-only): bucket recall < 1 vs the
+    HARD oracle: bucket recall < 1 vs the
     exact join, but the md5-deterministic quantized IVF training is
     SQL-replayable (see q_ann_ivf), so `_knn_join_ivf_sql` unrolls
     train→probe-assign→bucket-join→top-k in DuckDB; recall vs the
@@ -1012,8 +1017,8 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality join), hot-bucket skew guard ON at its default
     (max_band_df=100k: a band key shared by more vectors is dropped
     from pair generation with a logged count — see
-    operators/similarity.embedding_neardup_lsh_pairs). HARD oracle
-    since r5 (was rows-only): approximate vs the all-pairs spine but
+    operators/similarity.embedding_neardup_lsh_pairs). HARD oracle:
+    approximate vs the all-pairs spine but
     deterministic, so `_embedding_neardup_lsh_sql` replays the banded
     bucketing (and the skew guard, as a HAVING) in DuckDB; recall
     ≥ 0.95 vs the exact spine at threshold 0.3 and the skew-guard
@@ -1624,8 +1629,7 @@ def _doc_index(spark: SparkSession, sf_dir: str):
     executor memory — query-serving posture) and memoized per (session,
     sf_dir), so serving-path entries in one session share ONE validated
     handle instead of re-opening the store, re-walking signatures, and
-    re-reading parquet per call (part of the fuzzy_spans regression fix,
-    VERDICT r3 next #3)."""
+    re-reading parquet per call."""
     import hashlib
     import tempfile
 
@@ -1660,8 +1664,7 @@ def _doc_index(spark: SparkSession, sf_dir: str):
 
 def q_fuzzy_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-top-k span refinement (reference fuzzy.rs pipeline) over the
-    flagship query's BM25 winners — HARD oracle since r5 (was the last
-    rows-only entry): the Jaro-Winkler pipeline IS SQL-expressible —
+    flagship query's BM25 winners — HARD oracle: the Jaro-Winkler pipeline IS SQL-expressible —
     `_fuzzy_spans_sql` replays it bit-for-bit in DuckDB (bitmask-fold
     Jaro, windowed early-exit, recursive-CTE greedy dedups, regexp
     sentence snap; see the generator's comment block for the three
@@ -1677,7 +1680,7 @@ def q_fuzzy_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs scan as an In filter, the same k-bounded payload-fetch shape
     as plans/query.search.
 
-    Serving shape (r4, closing the r3 regression): ONE driver collect —
+    Serving shape: ONE driver collect —
     the ≤k winner rows are broadcast-joined to the index docs table
     IN-PLAN to carry `orig_doc_id` out with the scores (the docs scan
     prunes to two int columns), instead of the former
@@ -1747,20 +1750,10 @@ def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ORDERING CONTRACT (see ROTATION.md): the driver's CORRECTNESS gate
 # checks only the FIRST 50 entries of this dict, so order is coverage
-# policy, not style. Round 4 front-loads (a) the NEW r4 query
-# (dedup_clusters_star, position 1 per invariant #1), (b) fuzzy_spans,
-# whose serving implementation CHANGED this round (invariant #4 —
-# changed code gets a driver row in the round it changes), (c) the 12
-# operators that had never received a driver-green row (appended past
-# position 50 in r3), and (d) the hard-oracle stable set (positions
-# 15-50). The 13 entries rotated out to positions 51-63 are 7
-# rows-only (no-oracle-by-design) entries plus 6 hard-oracle entries
-# each green in the immediately preceding round (multimodal_meta,
-# frame_sample, resize_plan, exact_spans, pmi_pairs, token_stats) —
-# they rotate back into the window in round 5 per ROTATION.md.
+# policy, not style.
 
-# -- round-5 additions: regex retrieval, term vectors, mixture/LM/
-#    classifier training-data ops --------------------------------------
+# -- regex retrieval, term vectors, mixture/LM/classifier training-data
+#    ops ----------------------------------------------------------------
 
 # matches exactly {scan, small, spark} in the fixture vocabulary —
 # a multi-term expansion distinct from the prefix wildcard's set
@@ -1964,7 +1957,7 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SemDeDup-style corpus organization; also the 100 TB path for IVF
     coarse-quantizer training): iters scans, driver state O(k*d + P*k).
 
-    HARD oracle since r5 (was rows-only): with md5-ranked deterministic
+    HARD oracle: with md5-ranked deterministic
     init and per-iteration centroid quantization to a 1e-6 grid
     (floor(x*1e6+0.5)/1e6 — the identical IEEE op sequence in numpy and
     DuckDB), the float-sum partition-order variance (~1e-15 relative)
@@ -2047,14 +2040,10 @@ def q_trending_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # ================= ROUND-6 WINDOW (positions 1-50) =================
-    # The driver's correctness gate records only the FIRST 50 entries
-    # (ROTATION.md). Round 6 is the optimization round: per invariant
-    # #4 every query whose implementation changed this round sits in
-    # the window (positions 1-35), fuzzy_spans leads (the one query
-    # that has never had a hash-class driver row — VERDICT r5 next #2),
-    # and the remaining 15 slots go to entries whose last driver row
-    # is r4 (they were outside the r5 window).
+    # ==================== CHECKED WINDOW (positions 1-50) ==============
+    # The external correctness gate records only the FIRST 50 entries
+    # (ROTATION.md); entries whose implementation changed most recently
+    # sit here.
     "fuzzy_spans": q_fuzzy_spans,
     "dedup_clusters": q_dedup_clusters,
     "dedup_clusters_star": q_dedup_clusters_star,
@@ -2105,10 +2094,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "keyness": q_keyness,
     "tfidf_top_terms": q_tfidf_top_terms,
     "shard_plan": q_shard_plan,
-    # ============== ROTATED OUT OF THE R6 WINDOW (51-98) ===============
-    # 41 entries driver-green in CORRECTNESS_r05 (invariant #2) + 7
-    # entries green in r4 and re-verified against their oracles by the
-    # r6 session's strict sweeps (see ROTATION.md round-6 note).
+    # ================ OUTSIDE THE CHECKED WINDOW (51-98) ==============
+    # Entries already green at that gate, re-verified by strict oracle
+    # sweeps (see ROTATION.md).
     "tokenize_tf": q_tokenize_tf,
     "doc_length": q_doc_length,
     "docfreq": q_docfreq,
@@ -3009,13 +2997,11 @@ SELECT doc_id, CAST(SUM(i * {_TOKHASH}) AS BIGINT) AS fp
 FROM pos GROUP BY doc_id
 """
 
-# Remaining rows-only entries (no SQL oracle possible): the IVF pair
-# (ann_ivf / knn_join_ivf — centroid training samples by Spark crc32,
-# which DuckDB lacks) and fuzzy_spans (imperative anchor-scan +
-# Jaro-Winkler window search). The sign-LSH family (ann_lsh,
-# knn_join_ann, embedding_neardup_lsh) became HARD oracles in r5 —
-# seeded-plane bucketing replayed in DuckDB, see the generators at the
-# end of this file. IVF/ANN recall is asserted in
+# The sign-LSH family (ann_lsh, knn_join_ann, embedding_neardup_lsh),
+# the IVF pair and fuzzy_spans have HARD oracles too — seeded-plane
+# bucketing, md5-deterministic IVF training and the Jaro-Winkler span
+# pipeline replayed in DuckDB, see the generators at the end of this
+# file. IVF/ANN recall is asserted in
 # tests/test_similarity.py, fuzzy span behavior in tests/test_spans.py
 # (ported reference artifact vectors).
 
@@ -3518,7 +3504,7 @@ FROM win w JOIN sel USING (doc_id)
 """
 
 
-# -- round-5-prep oracles ------------------------------------------------
+# -- regex retrieval / term-vector / training-data oracles ---------------
 
 ORACLE_SQL["regex_search"] = f"""
 WITH {_TF_CTE},
@@ -3987,7 +3973,7 @@ ORACLE_SQL["kmeans_clusters"] = _kmeans_sql(KMEANS_K, KMEANS_ITERS, KMEANS_QDEC)
 
 def _minhash_prod_sql(n_perms: int, n_bands: int) -> str:
     """DuckDB twin of q_minhash_lsh_prod (64-perm / 16-band banding,
-    'universal' hash family) — HARD oracle since r5 (was rows-only).
+    'universal' hash family) — HARD oracle.
 
     The universal family is deterministic end-to-end: h = first 8
     bytes of md5(shingle) as a big-endian uint64, sig_i = min over
@@ -4049,8 +4035,7 @@ ORACLE_SQL["minhash_lsh_prod"] = _minhash_prod_sql(64, 16)
 
 def _smart_chunks_sql(chunk_size: int) -> str:
     """DuckDB twin of q_smart_chunks (C3 sentence packing + 2-sentence
-    overlap carry + header skip + garbage drop) — HARD oracle since r5
-    (was rows-only 'stateful fold → no SQL twin').
+    overlap carry + header skip + garbage drop) — HARD oracle.
 
     The fold IS SQL-expressible as a per-doc recursive CTE: state =
     (cur, p1) where p1 is the last sentence appended since the last
@@ -4165,7 +4150,7 @@ ORACLE_SQL["smart_chunks"] = _smart_chunks_sql(_SMART_CHUNK_CHARS)
 
 
 # ---------------------------------------------------------------------------
-# sign-LSH family oracles (HARD since r5; were rows-only)
+# sign-LSH family oracles
 # ---------------------------------------------------------------------------
 #
 # The sign-LSH bucketing is deterministic end-to-end: planes come from
@@ -4236,7 +4221,7 @@ def _ann_lsh_sql(n_planes: int, seed: int, multiprobe_bits: int) -> str:
     manifest planes, so recomputing the bucket per vector in SQL and
     filtering to the probe set reproduces the PartitionFilters scan;
     the scoring tail is the shared cosine_topk_over contract
-    (round-6 sim DESC, vec_id ASC, LIMIT 10; the query row itself is
+    (sim DESC, vec_id ASC, LIMIT 10; the query row itself is
     NOT excluded)."""
     from semantic_pdf_search_engine_spark.operators.similarity import hyperplanes
 
@@ -4309,7 +4294,7 @@ def _embedding_neardup_lsh_sql(
     candidate iff it shares ≥1 band key whose corpus membership is
     ≤ max_band_df (the hot-bucket guard, replayed as a HAVING — inert
     on fixture data but faithful at any scale); survivors score with
-    the shared round-6 cosine and the ≥ threshold cut is applied to
+    the shared cosine and the ≥ threshold cut is applied to
     the ROUNDED sim, as in score_bucket."""
     from semantic_pdf_search_engine_spark.operators.similarity import band_planes
 
@@ -4352,7 +4337,7 @@ ORACLE_SQL["embedding_neardup_lsh"] = _embedding_neardup_lsh_sql(
 
 
 # ---------------------------------------------------------------------------
-# IVF family oracles (HARD since r5; were the last ANN rows-only pair)
+# IVF family oracles
 # ---------------------------------------------------------------------------
 #
 # train_ivf_centroids switched from a crc32/rng-seeded sample to the
@@ -4454,7 +4439,7 @@ def _ann_ivf_sql(
     vec_id=0 query): probe set = the n_probe nearest trained centroids
     (dot DESC, cid ASC — ivf_probe_buckets' stable argsort tie-break),
     candidates = full-table assignment ∈ probes (the PartitionFilters
-    scan), scoring = the shared round-6 cosine tail (query row NOT
+    scan), scoring = the shared cosine tail (query row NOT
     excluded)."""
     return f"""
 WITH {_ivf_train_assign_cte(n_centroids, iters, sample, qdec)},
@@ -4521,7 +4506,7 @@ ORACLE_SQL["knn_join_ivf"] = _knn_join_ivf_sql(16, 5, 2048, _IVF_QDEC, 4, 10)
 
 
 # ---------------------------------------------------------------------------
-# fuzzy_spans oracle (HARD since r5; the last rows-only entry)
+# fuzzy_spans oracle
 # ---------------------------------------------------------------------------
 #
 # The Jaro-Winkler span-refinement pipeline (operators/spans.py:

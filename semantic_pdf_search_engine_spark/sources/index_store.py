@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from semantic_pdf_search_engine_spark.config import STRIPE_DOCS
 from semantic_pdf_search_engine_spark.operators import postings as P
+from semantic_pdf_search_engine_spark.operators.codec import CODEC, check_codec
 from semantic_pdf_search_engine_spark.operators.docids import (
     assign_doc_ids,
     unpersist_doc_ids,
@@ -305,7 +306,6 @@ class InvertedIndex:
     n_docs: int
     avgdl: float
     stripe_docs: int
-    codec: str = "vbyte"  # block codec recorded at build, dispatched at decode
     postings_rel: str = "postings"
     docfreq_rel: str = "docfreq"
     docs_rel: str = "docs"
@@ -431,17 +431,18 @@ def load_index(
     parquet file list (files appended or swapped in afterwards are
     invisible), so queries return what they returned when the snapshot
     was taken. Raises if the snapshot was expired or its files are
-    gone."""
+    gone, or if the manifest records a posting codec other than
+    vbyte (blocks in a foreign format would otherwise be misread)."""
     m = Manifest(index_dir)
     if snapshot_id is None:
         p = m.data["params"]
+        check_codec(p.get("codec", CODEC))
         return InvertedIndex(
             spark,
             index_dir,
             p["n_docs"],
             p["avgdl"],
             p.get("stripe_docs", STRIPE_DOCS),
-            codec=p.get("codec", "vbyte"),
             postings_rel=p.get("postings_rel", "postings"),
             docfreq_rel=p.get("docfreq_rel", "docfreq"),
             docs_rel=p.get("docs_rel", "docs"),
@@ -455,6 +456,7 @@ def load_index(
         )
     s = snaps[snapshot_id]
     p = s["params"]
+    check_codec(p.get("codec", CODEC))
     missing = [
         f
         for base in _SNAPSHOT_BASES
@@ -482,7 +484,6 @@ def load_index(
         p["n_docs"],
         p["avgdl"],
         p.get("stripe_docs", STRIPE_DOCS),
-        codec=p.get("codec", "vbyte"),
         postings_rel=p.get("postings_rel", "postings"),
         docfreq_rel=p.get("docfreq_rel", "docfreq"),
         docs_rel=p.get("docs_rel", "docs"),
@@ -503,15 +504,11 @@ def build_index(
     stripe_docs: int = STRIPE_DOCS,
     resume: bool = True,
     text_col: str = "text",
-    codec_name: str = "vbyte",
 ) -> InvertedIndex:
     """Full index build: docids → tf → stats/docfreq → posting blocks.
 
-    `codec_name` ('vbyte' | 'for') selects the posting-block codec; it
-    is recorded in the manifest params so every downstream decode —
-    query kernels, compaction, snapshots — dispatches the same codec.
-    On a resumed build whose postings stage already committed, the
-    RECORDED codec wins (the stored blocks are what they are).
+    The manifest params record the block format (`codec`: "vbyte");
+    load_index refuses any other recorded value.
 
     Stages commit independently with lineage manifests; `resume=True`
     skips completed stages (checkpoint resume). Resume is for an
@@ -640,10 +637,9 @@ def build_index(
     postings_rel = m.data["params"].get("postings_rel", "postings")
     if not (resume and m.stage_complete("postings")):
         t0 = time.time()
-        m.data["params"]["codec"] = codec_name
+        m.data["params"]["codec"] = CODEC
         blocks = P.build_posting_blocks(
-            tf, dfreq.select("term", "idf"), avgdl, stripe_docs,
-            codec_name=codec_name,
+            tf, dfreq.select("term", "idf"), avgdl, stripe_docs
         ).withColumn("term_bucket", term_bucket_udf(F.col("term")))
         # repartition on the partition column first: otherwise every
         # shuffle partition writes a sliver into every bucket directory
@@ -676,7 +672,6 @@ def build_index(
         n_docs,
         avgdl,
         stripe_docs,
-        codec=m.data["params"].get("codec", "vbyte"),
         postings_rel=postings_rel,
         docfreq_rel=docfreq_rel,
         docs_rel=docs_rel,
@@ -713,6 +708,7 @@ def append_to_index(
     d = Path(index_dir)
     m = Manifest(index_dir)
     params = m.data["params"]
+    check_codec(params.get("codec", CODEC))  # never mix block formats
     n_old = params["n_docs"]
     total_old = params["total_tokens"]
     stripe_docs = params["stripe_docs"]
@@ -762,13 +758,10 @@ def append_to_index(
     new_docfreq_rel = _next_version(docfreq_rel, "docfreq")
     merged.write.mode("overwrite").parquet(str(d / new_docfreq_rel))
 
-    # new posting blocks — merged idf only steers the argmax pick;
-    # appended segments MUST use the index's recorded codec (decode
-    # dispatches one codec for the whole postings table)
+    # new posting blocks — merged idf only steers the argmax pick
     dfreq_idf = spark.read.parquet(str(d / new_docfreq_rel)).select("term", "idf")
     blocks = P.build_posting_blocks(
-        tf_new, dfreq_idf, avgdl, stripe_docs,
-        codec_name=params.get("codec", "vbyte"),
+        tf_new, dfreq_idf, avgdl, stripe_docs
     ).withColumn("term_bucket", term_bucket_udf(F.col("term")))
     blocks.repartition(NUM_TERM_BUCKETS, "term_bucket").write.mode(
         "append"
@@ -810,7 +803,6 @@ def append_to_index(
         n_all,
         avgdl,
         stripe_docs,
-        codec=params.get("codec", "vbyte"),
         postings_rel=postings_rel,
         docfreq_rel=new_docfreq_rel,
         docs_rel=docs_rel,
@@ -912,7 +904,6 @@ def compact_index(
     params = m.data["params"]
     stripe_docs = idx.stripe_docs
     avgdl = idx.avgdl
-    codec_name = idx.codec
     k1, b = K1, B
 
     posts = idx.postings.join(
@@ -926,9 +917,7 @@ def compact_index(
             base = stripe * stripe_docs
             docs_l, tfs_l, dls_l = [], [], []
             for r in rows.itertuples(index=False):
-                dd, tt, ll = codec.decode_block(
-                    r.gaps, r.tfs, r.dls, base, codec_name
-                )
+                dd, tt, ll = codec.decode_block(r.gaps, r.tfs, r.dls, base)
                 docs_l.append(dd)
                 tfs_l.append(tt)
                 dls_l.append(ll)
@@ -940,9 +929,7 @@ def compact_index(
                 tfs + k1 * (1.0 - b + b * dls / avgdl)
             )
             top = int(np.flatnonzero(contrib == contrib.max())[0])
-            g, t, l = codec.encode_block(docs, tfs.astype(np.uint64),
-                                         dls.astype(np.uint64), base,
-                                         codec_name)
+            g, t, l = codec.encode_block(docs, tfs, dls, base)
             return {
                 "term": rows["term"].iloc[0],
                 "stripe_id": stripe,

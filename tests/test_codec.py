@@ -1,8 +1,10 @@
-"""Posting codec: delta+varbyte round-trip identity (property-based)."""
+"""Posting codec: delta+varbyte round-trip identity (property-based),
+and refusal of any other recorded block format."""
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -45,76 +47,6 @@ def test_compression_ratio():
     assert len(enc) == 4096  # one byte per gap
 
 
-# ---------------------------------------------------------------------------
-# frame-of-reference bit packing
-# ---------------------------------------------------------------------------
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500))
-@settings(max_examples=200, deadline=None)
-def test_for_roundtrip(vals):
-    arr = np.array(vals, dtype=np.uint64)
-    assert np.array_equal(codec.for_decode(codec.for_encode(arr)), arr)
-
-
-@given(
-    st.lists(
-        st.lists(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=60),
-        min_size=1,
-        max_size=30,
-    )
-)
-@settings(max_examples=100, deadline=None)
-def test_for_groups_equal_single(groups):
-    """Batch group encoder ≡ per-group single encoder, byte for byte."""
-    flat = np.array([v for g in groups for v in g], dtype=np.uint64)
-    counts = np.array([len(g) for g in groups], dtype=np.int64)
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    buf, nbytes = codec.for_encode_groups(flat, starts, ends)
-    off = np.concatenate([[0], np.cumsum(nbytes)])
-    for i, g in enumerate(groups):
-        piece = buf[off[i] : off[i + 1]]
-        assert piece == codec.for_encode(np.array(g, dtype=np.uint64))
-        assert np.array_equal(
-            codec.for_decode(piece), np.array(g, dtype=np.uint64)
-        )
-
-
-@given(
-    st.lists(st.integers(min_value=0, max_value=2**31), min_size=1, max_size=300),
-    st.integers(min_value=0, max_value=1000),
-)
-@settings(max_examples=100, deadline=None)
-def test_for_block_roundtrip(gaps, base):
-    doc_ids = base + np.cumsum(np.array(gaps, dtype=np.int64) + 1)
-    tfs = np.arange(1, len(doc_ids) + 1, dtype=np.uint64)
-    dls = tfs * 3 + 1
-    g, t, d = codec.encode_block(doc_ids, tfs, dls, base, "for")
-    docs2, tfs2, dls2 = codec.decode_block(g, t, d, base, "for")
-    assert np.array_equal(docs2, doc_ids)
-    assert np.array_equal(tfs2.astype(np.uint64), tfs)
-    assert np.array_equal(dls2.astype(np.uint64), dls)
-
-
-def test_for_empty():
-    assert codec.for_decode(codec.for_encode(np.array([], dtype=np.uint64))).size == 0
-
-
-def test_for_constant_block_is_minimal():
-    # constant values → width 1 (delta 0 everywhere): header + n/8 bytes
-    arr = np.full(4096, 123456, dtype=np.uint64)
-    enc = codec.for_encode(arr)
-    assert len(enc) == 13 + 4096 // 8
-
-
-def test_for_beats_vbyte_on_dense_gaps():
-    # gaps of 1 over 4096 postings: vbyte floor = 1 byte/value,
-    # FOR packs at 1 BIT/value (+13-byte header)
-    gaps = np.ones(4096, dtype=np.uint64)
-    assert len(codec.for_encode(gaps)) < len(codec.vb_encode(gaps)) / 4
-
-
 def test_vb_encode_groups_contract():
     flat = np.array([1, 200, 3, 70000, 5], dtype=np.uint64)
     starts = np.array([0, 2], dtype=np.int64)
@@ -125,43 +57,36 @@ def test_vb_encode_groups_contract():
     assert np.array_equal(codec.vb_decode(buf[off[1] : off[2]]), flat[2:])
 
 
-# ---------------------------------------------------------------------------
-# per-block adaptive codec
-# ---------------------------------------------------------------------------
-
-
-@given(
-    st.lists(
-        st.lists(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=60),
-        min_size=1,
-        max_size=30,
+def test_load_index_rejects_foreign_codec(spark, tmp_path):
+    """A manifest recording any block format other than vbyte is refused
+    at load (live and snapshot handles), by append, and by decode_block
+    itself."""
+    from semantic_pdf_search_engine_spark.fixtures import make_transcripts
+    from semantic_pdf_search_engine_spark.sources.index_store import (
+        Manifest,
+        append_to_index,
+        build_index,
+        load_index,
     )
-)
-@settings(max_examples=100, deadline=None)
-def test_auto_roundtrip_and_minimality(groups):
-    flat = np.array([v for g in groups for v in g], dtype=np.uint64)
-    counts = np.array([len(g) for g in groups], dtype=np.int64)
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    buf, nbytes = codec.auto_encode_groups(flat, starts, ends)
-    vb_buf, vb_nb = codec.vb_encode_groups(flat, starts, ends)
-    fo_buf, fo_nb = codec.for_encode_groups(flat, starts, ends)
-    assert np.array_equal(nbytes, np.minimum(vb_nb, fo_nb) + 1)
-    off = np.concatenate([[0], np.cumsum(nbytes)])
-    for i, g in enumerate(groups):
-        assert np.array_equal(
-            codec.auto_decode(buf[off[i] : off[i + 1]]),
-            np.array(g, dtype=np.uint64),
-        )
 
+    d = str(tmp_path / "idx")
+    transcripts = spark.createDataFrame(make_transcripts(n_convs=3))
+    build_index(spark, transcripts, d)
+    sid = Manifest(d).data["snapshots"][-1]["snapshot_id"]
+    load_index(spark, d)
+    load_index(spark, d, snapshot_id=sid)
 
-def test_auto_picks_for_on_dense_vbyte_on_zipf():
-    dense = np.ones(4096, dtype=np.uint64)  # FOR: 1 bit/val
-    rng = np.random.default_rng(7)
-    zipf = rng.zipf(1.3, 4096).astype(np.uint64)  # outlier widens FOR frame
-    for arr, tag in ((dense, b"\x01"), (zipf, b"\x00")):
-        buf, _ = codec.auto_encode_groups(
-            arr, np.zeros(1, dtype=np.int64), np.asarray([arr.size], dtype=np.int64)
-        )
-        assert buf[:1] == tag
-        assert np.array_equal(codec.auto_decode(buf), arr)
+    m = Manifest(d)
+    m.data["params"]["codec"] = "for"
+    for snap in m.data["snapshots"]:
+        snap["params"]["codec"] = "for"
+    m.save()
+    with pytest.raises(ValueError, match="'for'"):
+        load_index(spark, d)
+    with pytest.raises(ValueError, match="'for'"):
+        load_index(spark, d, snapshot_id=sid)
+    with pytest.raises(ValueError, match="'for'"):
+        append_to_index(spark, transcripts, d)
+    g, t, l = codec.encode_block(np.array([3, 5]), np.array([1, 2]), np.array([4, 4]), 0)
+    with pytest.raises(ValueError, match="'for'"):
+        codec.decode_block(g, t, l, 0, "for")

@@ -6,12 +6,69 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
 from semantic_pdf_search_engine_spark.operators.dedup import (
+    SHINGLE_N,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
 )
+
+
+def _shingles_expr(text, n: int = SHINGLE_N):
+    """Distinct token n-gram shingles as ARRAY<STRING> (1-based
+    element_at — mirrors DuckDB list indexing exactly)."""
+    toks = tokens_expr(text)
+    grams = F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(toks, i + j) for j in range(n)]
+            ),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(grams)
+
+
+def _doc_shingles_column(docs, id_col="doc_id", text_col="text"):
+    """Column-expression spec of dedup.doc_shingles."""
+    return docs.select(
+        F.col(id_col), F.explode(_shingles_expr(F.col(text_col))).alias("shingle")
+    )
+
+
+def _simhash_column(docs, id_col="doc_id", text_col="text"):
+    """Pure-Column spec of dedup.simhash — the shape the DuckDB oracle
+    mirrors: 16-way bit explode + two groupBys."""
+    from semantic_pdf_search_engine_spark.operators.bm25 import tf_df
+
+    tf = tf_df(docs, id_col, text_col).withColumn(
+        "h", F.md5(F.col("term").cast("binary"))
+    )
+    bits = tf.select(
+        F.col(id_col),
+        F.col("tf"),
+        F.col("h"),
+        F.explode(F.sequence(F.lit(1), F.lit(16))).alias("j"),
+    ).withColumn(
+        "nibble",
+        F.instr(F.lit("0123456789abcdef"), F.substring(F.col("h"), F.col("j"), 1)) - 1,
+    ).withColumn(
+        "signed", F.col("tf") * F.when(F.col("nibble") >= 8, 1).otherwise(-1)
+    )
+    sj = bits.groupBy(id_col, "j").agg(F.sum("signed").alias("s"))
+    return (
+        sj.withColumn(
+            "bitval",
+            F.when(F.col("s") > 0, F.pow(F.lit(2.0), F.col("j") - 1).cast("long")).otherwise(
+                F.lit(0)
+            ),
+        )
+        .groupBy(id_col)
+        .agg(F.sum("bitval").cast("long").alias("simhash"))
+    )
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -439,8 +496,8 @@ def test_doc_shingles_arrow_equals_column(spark, planted):
     same (doc, shingle) set."""
     from semantic_pdf_search_engine_spark.operators.dedup import doc_shingles
 
-    a = {(r["doc_id"], r["shingle"]) for r in doc_shingles(planted, mode="arrow").collect()}
-    c = {(r["doc_id"], r["shingle"]) for r in doc_shingles(planted, mode="column").collect()}
+    a = {(r["doc_id"], r["shingle"]) for r in doc_shingles(planted).collect()}
+    c = {(r["doc_id"], r["shingle"]) for r in _doc_shingles_column(planted).collect()}
     assert a == c and len(a) > 0
 
 
@@ -832,13 +889,9 @@ def test_minhash_prod_sql_generator_other_params(spark, sf_dir):
 
 
 def test_simhash_arrow_equals_column_spec(spark, sf_dir):
-    """r6: the per-doc Arrow fingerprint pass (mode='arrow', zero
-    shuffles) must agree EXACTLY with the pure-Column spec the DuckDB
-    oracle mirrors — including dropping zero-token docs."""
-    from pyspark.sql import functions as F
-
-    from semantic_pdf_search_engine_spark.operators.dedup import simhash
-
+    """The per-doc Arrow fingerprint pass (zero shuffles) must agree
+    EXACTLY with the pure-Column spec the DuckDB oracle mirrors —
+    including dropping zero-token docs."""
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") < 400)
@@ -851,7 +904,7 @@ def test_simhash_arrow_equals_column_spec(spark, sf_dir):
             )
         )
     )
-    a = {(r["doc_id"], r["simhash"]) for r in simhash(docs, mode="arrow").collect()}
-    c = {(r["doc_id"], r["simhash"]) for r in simhash(docs, mode="column").collect()}
+    a = {(r["doc_id"], r["simhash"]) for r in simhash(docs).collect()}
+    c = {(r["doc_id"], r["simhash"]) for r in _simhash_column(docs).collect()}
     assert a == c
     assert all(did < 99990 for did, _ in a)  # tokenless docs have no row

@@ -3,11 +3,17 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
 from semantic_pdf_search_engine_spark.fixtures import make_transcripts
-from semantic_pdf_search_engine_spark.operators.docids import (
-    assign_doc_ids,
-    assign_doc_ids_small,
-)
+from semantic_pdf_search_engine_spark.operators.docids import ORDER_COLS, assign_doc_ids
+
+
+def _assign_doc_ids_small(df, order_cols=ORDER_COLS):
+    """Window-based spec: single-partition sort, small data only."""
+    w = Window.orderBy(*[F.col(c) for c in order_cols])
+    return df.withColumn("doc_id", F.row_number().over(w).cast("long") - F.lit(1))
 
 
 def _collect_ids(df):
@@ -21,7 +27,7 @@ def test_matches_window_spec(spark):
     pdf = make_transcripts(n_convs=20)
     df = spark.createDataFrame(pdf)
     got = _collect_ids(assign_doc_ids(df, num_partitions=7))
-    want = _collect_ids(assign_doc_ids_small(df))
+    want = _collect_ids(_assign_doc_ids_small(df))
     assert got == want
 
 

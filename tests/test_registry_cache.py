@@ -133,3 +133,18 @@ def test_fuzzy_spans_no_per_call_drift(spark, sf_dir, tmp_path, monkeypatch):
     early = sum(walls[1:4]) / 3
     late = sum(walls[-3:]) / 3
     assert late <= max(2.0 * early, early + 1.0), f"wall drift: {walls}"
+
+
+def test_read_parquet_schema_follows_rewrite(spark, tmp_path):
+    """A table rewritten in-process with an added column must not be
+    read through the schema memoized for its old contents."""
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1, "a")], "id long, text string").write.parquet(path)
+    assert registry._read_parquet(spark, path).columns == ["id", "text"]
+
+    spark.createDataFrame(
+        [(1, "a", 2.0)], "id long, text string, extra double"
+    ).write.mode("overwrite").parquet(path)
+    df = registry._read_parquet(spark, path)
+    assert "extra" in df.columns
+    assert df.collect()[0]["extra"] == 2.0

@@ -1,12 +1,33 @@
-"""The two tokenize+TF implementations (JVM codegen vs Arrow pandas)
-must agree EXACTLY on artifact-noised corpora — the engine may pick
-either by mode without affecting rank identity."""
+"""The engine's Arrow tokenize+TF pass must agree EXACTLY with the
+pure-JVM Column-expression spec on artifact-noised corpora."""
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
 from semantic_pdf_search_engine_spark.fixtures import make_transcripts
+from semantic_pdf_search_engine_spark.functions.normalize import normalize_expr
+from semantic_pdf_search_engine_spark.functions.tokenize import tokens_expr
 from semantic_pdf_search_engine_spark.operators.docids import assign_doc_ids
 from semantic_pdf_search_engine_spark.operators.postings import term_frequencies
+
+
+def _term_frequencies_jvm(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Reference spec: normalize_expr + tokens_expr + explode + hash
+    aggregate, entirely whole-stage codegen — zero Python."""
+    ft = tokens_expr(normalize_expr(F.col(text_col)))  # tokens_expr lowers
+    return (
+        docs.select("doc_id", ft.alias("_ft"))
+        .select(
+            "doc_id",
+            F.size("_ft").cast("int").alias("dl"),
+            F.explode("_ft").alias("term"),
+        )
+        .groupBy("doc_id", "term", "dl")
+        .agg(F.count("*").cast("int").alias("tf"))
+        .select("doc_id", "term", "tf", "dl")
+    )
 
 
 def test_jvm_equals_arrow(spark):
@@ -15,11 +36,11 @@ def test_jvm_equals_arrow(spark):
     key = lambda r: (r["doc_id"], r["term"])
     jvm = sorted(
         ((r["doc_id"], r["term"], r["tf"], r["dl"])
-         for r in term_frequencies(docs, mode="jvm").collect())
+         for r in _term_frequencies_jvm(docs).collect())
     )
     arrow = sorted(
         ((r["doc_id"], r["term"], r["tf"], r["dl"])
-         for r in term_frequencies(docs, mode="arrow").collect())
+         for r in term_frequencies(docs).collect())
     )
     assert jvm == arrow
     docs.unpersist()
